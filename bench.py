@@ -36,6 +36,7 @@ from __future__ import annotations
 import json
 import os
 import sys
+import threading
 import time
 from pathlib import Path
 
@@ -43,6 +44,12 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from dnsflow_clickhouse_spark.queries import QUERY_REGISTRY
 from dnsflow_clickhouse_spark.session import get_spark
+from dnsflow_clickhouse_spark.sources.synth import (
+    SYNTH_APP_TIME,
+    demo_dims,
+    synthetic_raw_events,
+)
+from dnsflow_clickhouse_spark.streaming.pipeline import run_window
 
 DISAGREE_RATIO = 1.5
 DISAGREE_FLOOR_S = 0.5
@@ -96,32 +103,23 @@ def _run_query(spark, sf_dir: str, fn) -> float:
 
 
 def _dns_batch(spark, sf_dir: str) -> tuple[float, dict[str, float], float]:
-    """One production window batch end-to-end; returns
-    (wall, per-report, fanout_overhead)."""
-    from dnsflow_clickhouse_spark.sources.synth import (
-        SYNTH_APP_TIME,
-        demo_dims,
-        synthetic_raw_events,
-    )
-    from dnsflow_clickhouse_spark.streaming.pipeline import process_batch
-
+    """One production window batch end-to-end through ``run_window``
+    with a lock around each noop write, so every report has its own
+    clock (the first one also pays the shared base's scan+parse+enrich);
+    returns (wall, per-report, fanout_overhead)."""
     raw = synthetic_raw_events(spark, sf_dir)
     dims = demo_dims(spark)
-    t0 = time.perf_counter()
-    out, base = process_batch(
-        raw, dims, SYNTH_APP_TIME, deterministic=True, return_base=True
-    )
     per_report: dict[str, float] = {}
-    # materialize the shared cached base on its own clock so the first
-    # report (dns_flow_qps) isn't billed for the scan+parse+enrich the
-    # whole fan-out amortizes (r5 verdict: report attribution honesty)
-    t1 = time.perf_counter()
-    base.write.format("noop").mode("overwrite").save()
-    per_report["base_materialize"] = round(time.perf_counter() - t1, 3)
-    for name, df in out.items():
-        t1 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        per_report[name] = round(time.perf_counter() - t1, 3)
+    lock = threading.Lock()
+
+    def serial_noop(name, df, _app_time):
+        with lock:
+            t1 = time.perf_counter()
+            df.write.format("noop").mode("overwrite").save()
+            per_report[name] = round(time.perf_counter() - t1, 3)
+
+    t0 = time.perf_counter()
+    run_window(raw, dims, SYNTH_APP_TIME, serial_noop, deterministic=True)
     wall = time.perf_counter() - t0
     # attribute the residual (r6 verdict ask #5): wall minus the summed
     # per-line clocks = inter-job driver overhead (plan/AQE replan,
@@ -131,36 +129,25 @@ def _dns_batch(spark, sf_dir: str) -> tuple[float, dict[str, float], float]:
     # per-report dict (r7 ADVICE): consumers iterating report names
     # must not see a phantom 17th report whose timing is a residual.
     fanout_overhead = round(wall - sum(per_report.values()), 3)
-    spark.catalog.clearCache()  # process_batch persists base/flow
     return wall, per_report, fanout_overhead
 
 
 def _dns_batch_concurrent(spark, sf_dir: str) -> float:
-    """The same production batch with the 16 sink jobs submitted from a
-    driver thread pool (io.write_reports_concurrent, what app.py batch
-    mode runs): overlapping the per-job driver gaps recovers most of
+    """The same production batch through ``run_window`` with a noop
+    sink, so the sink jobs overlap the way app.py's modes run them:
+    overlapping the per-job driver gaps recovers most of
     ``fanout_overhead`` — measured 14.2s -> 10.2s warm at sf0.1. Timed
     as one number (per-report attribution is meaningless when jobs
     interleave)."""
-    from dnsflow_clickhouse_spark.io import write_reports_concurrent
-    from dnsflow_clickhouse_spark.sources.synth import (
-        SYNTH_APP_TIME,
-        demo_dims,
-        synthetic_raw_events,
-    )
-    from dnsflow_clickhouse_spark.streaming.pipeline import process_batch
-
     raw = synthetic_raw_events(spark, sf_dir)
     dims = demo_dims(spark)
     t0 = time.perf_counter()
-    out = process_batch(raw, dims, SYNTH_APP_TIME, deterministic=True)
-    write_reports_concurrent(
-        out,
-        lambda _n, df: df.write.format("noop").mode("overwrite").save(),
+    run_window(
+        raw, dims, SYNTH_APP_TIME,
+        lambda _n, df, _t: df.write.format("noop").mode("overwrite").save(),
+        deterministic=True,
     )
-    wall = time.perf_counter() - t0
-    spark.catalog.clearCache()
-    return wall
+    return time.perf_counter() - t0
 
 
 def _idle_gate() -> float:

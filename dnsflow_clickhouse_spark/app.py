@@ -29,7 +29,7 @@ from dnsflow_clickhouse_spark.sources.events import parse_raw_lines
 from dnsflow_clickhouse_spark.streaming.pipeline import (
     WINDOW_SECONDS,
     run_backfill,
-    run_batch_from_lines,
+    run_window,
     start_stream,
 )
 
@@ -121,21 +121,9 @@ def main(argv: list[str] | None = None) -> None:
             "bigdata_user_tags": R.user_tags(middle, dims),
         }.items():
             sink(name, df, batch)
-    else:  # batch: one window, same code path as a stream micro-batch
-        from dnsflow_clickhouse_spark.io import write_reports_concurrent
-
-        lines = spark.read.text(args.input)
-        reports = run_batch_from_lines(
-            lines, dims, args.app_time, deterministic=args.deterministic
-        )
-        # concurrent submission: sixteen small independent jobs over one
-        # cached base — a thread pool overlaps the per-job driver gaps
-        # (bench.py's fanout_overhead), which on a large cluster is the
-        # difference between the cluster working and idling between tiny
-        # stages. Writes are independent; results identical to the loop.
-        write_reports_concurrent(
-            reports, lambda name, df: sink(name, df, args.app_time)
-        )
+    else:  # batch: one window through the same runner as a stream micro-batch
+        events = parse_raw_lines(spark.read.text(args.input))
+        run_window(events, dims, args.app_time, sink, deterministic=args.deterministic)
 
 
 if __name__ == "__main__":

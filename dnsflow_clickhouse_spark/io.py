@@ -316,10 +316,10 @@ def write_reports_concurrent(
     thread pool. The 16-report fan-out is sixteen small independent
     jobs over one cached base frame; submitted sequentially, the wall
     is sum(job + driver gap) — on a 1000-executor cluster most of the
-    cluster idles while the driver plans the next tiny job (bench.py's
-    ``fanout_overhead`` line is exactly this cost, ~3.5s of the batch
-    at sf0.1). Spark's scheduler accepts concurrent job submission
-    from multiple driver threads natively (FAIR or FIFO — each job's
+    cluster idles while the driver plans the next tiny job (perfbench's
+    ``io.fanout_gap_s`` metric is exactly this cost). Spark's scheduler
+    accepts concurrent job submission from multiple driver threads
+    natively (FAIR or FIFO — each job's
     tasks interleave either way), so a thread pool overlaps the driver
     gaps and the small stages WITHOUT changing any result: the writes
     are independent reads of one persisted frame.

@@ -1,7 +1,7 @@
-"""The 5-minute micro-batch pipeline: one shared ``process_batch`` used
-by both streaming and backfill (a hard requirement per SURVEY §3.2 —
-the reference replays the same ``call()`` for both,
-DnsRptCH.scala:981-1164, DnsRptOffline.scala:69-73).
+"""The 5-minute micro-batch pipeline: one window runner, ``run_window``,
+used by the stream, the backfill and the one-shot batch (a hard
+requirement per SURVEY §3.2 — the reference replays the same ``call()``
+for both, DnsRptCH.scala:981-1164, DnsRptOffline.scala:69-73).
 
 Reference behavior being re-expressed:
 - trigger: a DStream clock hack firing every 300 s (DnsRptCH.scala:1213)
@@ -10,23 +10,24 @@ Reference behavior being re-expressed:
 - window: 5-min tumbling on event time with a fixed 5-min late allowance
   (records for window W are processed when W+5min closes;
   DnsRptCH.scala:888, 988-994) -> ``withWatermark`` + window filter in
-  ``process_batch``.
+  the window's plan.
 - state: none — every batch is independent; the fan-out is stateless
   over the batch's events, so ``foreachBatch`` is the right tool (no
   stateful operators needed).
-- caching: base and top frames persist(MEMORY_AND_DISK) around the
-  16-report fan-out, unpersisted in finally (DnsRptCH.scala:1069-1160).
+- caching: ``run_window`` persists base and flow (MEMORY_AND_DISK)
+  around the 18-report fan-out and unpersists them in ``finally``
+  (DnsRptCH.scala:1069-1160): nothing stays cached between windows.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
-from typing import Literal, overload
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from dnsflow_clickhouse_spark.io import write_reports_concurrent
 from dnsflow_clickhouse_spark.operators import reports as R
 from dnsflow_clickhouse_spark.operators.enrich import (
     EnrichDims,
@@ -38,48 +39,12 @@ from dnsflow_clickhouse_spark.sources.events import derive_events, parse_raw_lin
 WINDOW_SECONDS = 300
 
 
-@overload
-def process_batch(
-    events: DataFrame,
-    dims: EnrichDims,
-    app_time_s: int | None = ...,
-    deterministic: bool = ...,
-    return_base: Literal[False] = ...,
-) -> dict[str, DataFrame]: ...
-
-
-@overload
-def process_batch(
-    events: DataFrame,
-    dims: EnrichDims,
-    app_time_s: int | None = ...,
-    deterministic: bool = ...,
-    *,
-    return_base: Literal[True],
-) -> tuple[dict[str, DataFrame], DataFrame]: ...
-
-
-def process_batch(
-    events: DataFrame,
-    dims: EnrichDims,
-    app_time_s: int | None = None,
-    deterministic: bool = False,
-    return_base: bool = False,
-) -> dict[str, DataFrame] | tuple[dict[str, DataFrame], DataFrame]:
-    """Run the full report fan-out over one window's events.
-
-    ``events`` is the *raw* typed event frame (RAW_EVENT_SCHEMA columns);
-    filtering to ``[app_time_s, app_time_s + 300)`` happens here exactly
-    like the reference's per-record window filter (DnsRptCH.scala:888).
-
-    Returns {report_name: DataFrame}; the caller persists/writes. All 16
-    reports read the cached base/top frames — one scan + one parse
-    amortized across the fan-out. ``return_base=True`` returns
-    ``(reports, base)`` instead, so a harness can materialize the shared
-    cached base on its own clock and report the scan+parse+enrich cost
-    separately from the per-report costs (bench.py's
-    ``base_materialize`` line) — production callers ignore it.
-    """
+def _build_window(
+    events: DataFrame, dims: EnrichDims, app_time_s: int | None, deterministic: bool
+) -> tuple[dict[str, DataFrame], list[DataFrame]]:
+    """``(reports, persisted)``: the window's plan and its cached frames
+    in release order (flow reads base, so flow goes first and Spark has
+    no dependent cache entry to re-plan)."""
     window_end = app_time_s + WINDOW_SECONDS if app_time_s is not None else None
     derived = derive_events(
         events,
@@ -119,9 +84,27 @@ def process_batch(
         "bigdata_dns_flow_top_user": R.user_report(base, dims),
         "dns_middle_user": R.user_middle_data(base, dims),
     }
-    if return_base:
-        return out, base
-    return out
+    return out, [flow, base]
+
+
+def process_batch(
+    events: DataFrame,
+    dims: EnrichDims,
+    app_time_s: int | None = None,
+    deterministic: bool = False,
+) -> dict[str, DataFrame]:
+    """Build the full report fan-out over one window's events.
+
+    ``events`` is the *raw* typed event frame (RAW_EVENT_SCHEMA columns);
+    filtering to ``[app_time_s, app_time_s + 300)`` happens here exactly
+    like the reference's per-record window filter (DnsRptCH.scala:888).
+
+    Returns {report_name: DataFrame}. All 18 reports read the cached
+    base/flow frames — one scan + one parse amortized across the
+    fan-out. A direct caller owns those persisted frames; ``run_window``
+    is the caller that releases them.
+    """
+    return _build_window(events, dims, app_time_s, deterministic)[0]
 
 
 def run_batch_from_lines(
@@ -130,10 +113,32 @@ def run_batch_from_lines(
     app_time_s: int | None = None,
     deterministic: bool = False,
 ) -> dict[str, DataFrame]:
-    """JSON-lines variant: parse then process (reference S3 + call())."""
+    """JSON-lines variant: parse then process (reference S3 + call()).
+    The caller owns the persisted frames, as with ``process_batch``."""
     return process_batch(
         parse_raw_lines(lines), dims, app_time_s, deterministic=deterministic
     )
+
+
+def run_window(
+    events: DataFrame,
+    dims: EnrichDims,
+    app_time_s: int,
+    sink: Callable[[str, DataFrame, int], None],
+    deterministic: bool = False,
+) -> None:
+    """Run one window end to end: build its 18 reports, hand each to
+    ``sink(name, df, app_time_s)`` through ``io.write_reports_concurrent``,
+    and release the cached frames in ``finally`` — on success and when a
+    sink raises alike. The sink is called from driver threads."""
+    reports, persisted = _build_window(events, dims, app_time_s, deterministic)
+    try:
+        write_reports_concurrent(
+            reports, lambda name, df: sink(name, df, app_time_s)
+        )
+    finally:
+        for df in persisted:
+            df.unpersist()
 
 
 def run_backfill(
@@ -145,12 +150,11 @@ def run_backfill(
     sink: Callable[[str, DataFrame, int], None],
     deterministic: bool = False,
 ) -> None:
-    """Replay ``process_batch`` over [start_s, end_s] in 300-s steps —
+    """Replay ``run_window`` over [start_s, end_s] in 300-s steps —
     the reference's offline loop (DnsRptOffline.scala:69-73). One code
     path with streaming; only the driver loop differs."""
     for t in range(start_s, end_s, WINDOW_SECONDS):
-        for name, df in process_batch(events, dims, t, deterministic=deterministic).items():
-            sink(name, df, t)
+        run_window(events, dims, t, sink, deterministic=deterministic)
 
 
 def windowed_qps_stream(
@@ -291,7 +295,7 @@ def start_stream(
     deterministic: bool = False,
 ):
     """File-source Structured Stream: new JSON-line files are discovered
-    per trigger; each micro-batch runs the same ``process_batch`` via
+    per trigger; each micro-batch runs the same ``run_window`` via
     foreachBatch. Watermarking is implicit in the window filter (each
     batch processes the window that closed >= 5 min ago, exactly the
     reference's late-data allowance); checkpointing gives restart-safety
@@ -315,8 +319,7 @@ def start_stream(
         if bounds["m"] is None:
             return
         app_time = (int(bounds["m"]) // WINDOW_SECONDS - 1) * WINDOW_SECONDS
-        for name, df in process_batch(parsed, dims, app_time, deterministic=deterministic).items():
-            sink(name, df, app_time)
+        run_window(parsed, dims, app_time, sink, deterministic=deterministic)
 
     return (
         raw.writeStream.foreachBatch(handle)

@@ -1333,12 +1333,24 @@ def test_choose_n_band_groups_model():
 def test_release_group_scratch_size_gate(spark, monkeypatch):
     """Small inputs must skip the GC nudge + settle entirely; unknown
     (None) sizes are treated as large and keep it."""
+    import threading
     import time as _time_mod
 
     from dnsflow_clickhouse_spark.operators import dedup as dd
 
+    # record only this thread's sleeps: py4j's finalizer thread sleeps
+    # on the same global time.sleep in the background
     slept: list[float] = []
-    monkeypatch.setattr(_time_mod, "sleep", lambda s: slept.append(s))
+    caller = threading.get_ident()
+    real_sleep = _time_mod.sleep
+
+    def fake_sleep(s):
+        if threading.get_ident() == caller:
+            slept.append(s)
+        else:
+            real_sleep(s)
+
+    monkeypatch.setattr(_time_mod, "sleep", fake_sleep)
     dd._release_group_scratch(spark, 1 << 20)  # 1 MB: gated out
     assert slept == []
     dd._release_group_scratch(spark, None)  # unknown: conservative

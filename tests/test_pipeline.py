@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from dnsflow_clickhouse_spark.operators import reports as R
 from dnsflow_clickhouse_spark.operators.enrich import enrich_base, enrich_top
 from dnsflow_clickhouse_spark.sources.events import derive_events, parse_raw_lines
-from dnsflow_clickhouse_spark.streaming.pipeline import process_batch
+from dnsflow_clickhouse_spark.streaming.pipeline import run_window
 
 from tests import fixtures_dns as FX
 
@@ -160,14 +160,16 @@ def test_user_report_shape(spark, base_df):
 def test_full_fanout_smoke(spark):
     lines = spark.createDataFrame([(l,) for l in FX.raw_lines()], "value string")
     raw = parse_raw_lines(lines)
-    out = process_batch(raw, FX.build_dims(spark), FX.APP_TIME, deterministic=True)
-    assert len(out) == 18
-    for name, df in out.items():
-        n = df.count()
-        assert n >= 0, name
+    rows: dict[str, int] = {}
+
+    def sink(name, df, _app_time):
+        rows[name] = df.count()
+
+    run_window(raw, FX.build_dims(spark), FX.APP_TIME, sink, deterministic=True)
+    assert len(rows) == 18
     # key reports non-empty on the fixture window
-    assert out["dns_flow_qps"].count() >= 2
-    assert out["dns_flow_clear"].count() > 0
+    assert rows["dns_flow_qps"] >= 2
+    assert rows["dns_flow_clear"] > 0
 
 
 def test_parse_with_quarantine_accounts_for_every_line(spark):

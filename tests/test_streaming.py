@@ -9,18 +9,32 @@ from __future__ import annotations
 import time
 from pathlib import Path
 
+import pytest
 from tests.fixtures_dns import APP_TIME, WINDOW, build_dims, raw_lines
 
+from dnsflow_clickhouse_spark.sources.events import parse_raw_lines
 from dnsflow_clickhouse_spark.streaming.pipeline import (
-    process_batch,
     run_backfill,
-    run_batch_from_lines,
+    run_window,
     start_stream,
 )
 
 
 def _rows(df):
     return sorted(map(tuple, df.collect()))
+
+
+def _persisted_rdds(spark) -> int:
+    return len(spark.sparkContext._jsc.getPersistentRDDs())
+
+
+def _cached_entries(spark) -> int:
+    """DataFrame cache entries in the session. The suite shares one
+    session and some catalog operators leave their own entries behind,
+    so tests compare against a count taken before the run. (No test may
+    leave a window's frames cached: a later window over the same plan
+    would reuse and then release that entry.)"""
+    return spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
 
 
 def test_stream_matches_batch(spark, tmp_path):
@@ -53,9 +67,14 @@ def test_stream_matches_batch(spark, tmp_path):
     assert set(got["__times"]) == {APP_TIME}
 
     lines_df = spark.createDataFrame([(l,) for l in raw_lines()], "value string")
-    expected = run_batch_from_lines(lines_df, dims, APP_TIME, deterministic=True)
+    expected: dict[str, list] = {}
+    run_window(
+        parse_raw_lines(lines_df), dims, APP_TIME,
+        lambda name, df, t: expected.__setitem__(name, _rows(df)),
+        deterministic=True,
+    )
     for name in ("dns_flow_qps", "dns_flow_response_code", "dns_flow_trend"):
-        assert got[name] == _rows(expected[name]), f"stream != batch for {name}"
+        assert got[name] == expected[name], f"stream != batch for {name}"
 
 
 def test_stream_late_file_triggers_same_window(spark, tmp_path):
@@ -96,8 +115,6 @@ def test_stream_late_file_triggers_same_window(spark, tmp_path):
 def test_backfill_replays_windows(spark):
     dims = build_dims(spark)
     lines_df = spark.createDataFrame([(l,) for l in raw_lines()], "value string")
-    from dnsflow_clickhouse_spark.sources.events import parse_raw_lines
-
     events = parse_raw_lines(lines_df)
 
     seen: dict[tuple[str, int], int] = {}
@@ -112,6 +129,75 @@ def test_backfill_replays_windows(spark):
     # at APP_TIME+WINDOW (qps emits the all-clients sentinel + 1 client)
     assert seen[("dns_flow_qps", APP_TIME)] > 2
     assert seen[("dns_flow_qps", APP_TIME + WINDOW)] == 2
+
+
+def test_backfill_releases_cached_frames_every_window(spark):
+    """run_window owns the cache lifecycle: each window persists base and
+    flow for its fan-out (at most two more persisted RDDs inside the
+    sink) and releases both before the next window, so a long backfill
+    or a 24/7 stream holds nothing between windows."""
+    dims = build_dims(spark)
+    events = parse_raw_lines(
+        spark.createDataFrame([(l,) for l in raw_lines()], "value string")
+    )
+    baseline, entries = _persisted_rdds(spark), _cached_entries(spark)
+    in_sink: list[int] = []
+
+    def sink(name, df, t):
+        df.write.format("noop").mode("overwrite").save()
+        in_sink.append(_persisted_rdds(spark))
+
+    run_backfill(
+        spark, events, dims, APP_TIME, APP_TIME + 3 * WINDOW, sink,
+        deterministic=True,
+    )
+    assert len(in_sink) == 3 * 18
+    assert max(in_sink) <= baseline + 2, (baseline, in_sink)
+    assert _persisted_rdds(spark) <= baseline
+    assert _cached_entries(spark) == entries
+
+
+def test_run_window_releases_frames_when_a_sink_fails(spark):
+    dims = build_dims(spark)
+    events = parse_raw_lines(
+        spark.createDataFrame([(l,) for l in raw_lines()], "value string")
+    )
+    baseline, entries = _persisted_rdds(spark), _cached_entries(spark)
+
+    def sink(name, df, t):
+        if name == "dns_flow_trend":
+            raise ValueError("sink exploded")
+        df.write.format("noop").mode("overwrite").save()
+
+    with pytest.raises(RuntimeError, match="dns_flow_trend"):
+        run_window(events, dims, APP_TIME, sink, deterministic=True)
+    assert _persisted_rdds(spark) <= baseline
+    assert _cached_entries(spark) == entries
+
+
+def test_stream_leaves_no_cached_frames(spark, tmp_path):
+    dims = build_dims(spark)
+    inp = tmp_path / "in"
+    inp.mkdir()
+    (inp / "chunk-000.txt").write_text("\n".join(raw_lines()), encoding="utf-8")
+    entries = _cached_entries(spark)
+    written: list[str] = []
+
+    def sink(name, df, t):
+        df.write.format("noop").mode("overwrite").save()
+        written.append(name)
+
+    q = start_stream(
+        spark, str(inp), dims, sink,
+        checkpoint_dir=str(tmp_path / "ckpt"), trigger_seconds=1,
+        deterministic=True,
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert len(written) == 18
+    assert _cached_entries(spark) == entries
 
 
 def test_windowed_watermark_stream(spark, tmp_path):

@@ -55,11 +55,14 @@ def test_synthetic_events_exercise_enrichment_paths(spark):
 
 
 def test_process_batch_runs_on_synthetic_input(spark):
-    from dnsflow_clickhouse_spark.streaming.pipeline import process_batch
+    from dnsflow_clickhouse_spark.streaming.pipeline import run_window
 
     raw = synthetic_raw_events(spark, SF_DIR)
-    out = process_batch(raw, demo_dims(spark), SYNTH_APP_TIME, deterministic=True)
-    assert len(out) == 18
-    qps = out["dns_flow_qps"]
-    assert qps.count() > 0
-    spark.catalog.clearCache()
+    rows: dict[str, int] = {}
+
+    def sink(name, df, _app_time):
+        rows[name] = df.count()
+
+    run_window(raw, demo_dims(spark), SYNTH_APP_TIME, sink, deterministic=True)
+    assert len(rows) == 18
+    assert rows["dns_flow_qps"] > 0

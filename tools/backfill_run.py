@@ -13,7 +13,7 @@ way a production backfill over a 100 TB store would:
   ``io.read_events_window`` — the artifact asserts the scan carries
   ``PartitionFilters`` (planning-time pruning: a month-long backfill
   touches each window's files once, never the whole store);
-- each step runs the full 18-report ``process_batch`` fan-out and
+- each step runs the full 18-report fan-out through ``run_window`` and
   lands every report through ``io.write_report_idempotent`` keyed on
   the window start (real parquet writes, not noop);
 - after the sweep, ONE window is REPLAYED in full (the crashed-and-
@@ -51,10 +51,7 @@ from dnsflow_clickhouse_spark.sources.synth import (
     demo_dims,
     synthetic_raw_events,
 )
-from dnsflow_clickhouse_spark.streaming.pipeline import (
-    WINDOW_SECONDS,
-    process_batch,
-)
+from dnsflow_clickhouse_spark.streaming.pipeline import WINDOW_SECONDS, run_window
 
 
 def _table_hashes(spark, reports_dir: Path, tables: list[str]) -> dict[str, list[int]]:
@@ -83,15 +80,19 @@ def _run_window(spark, store: str, reports_dir: Path, dims, t: int) -> tuple[flo
     win = read_events_window(spark, store, t, t + WINDOW_SECONDS)
     pruned = "PartitionFilters: [" in win._jdf.queryExecution().executedPlan().toString()
     raw = win.drop("ts")
-    out = process_batch(raw, dims, t, deterministic=True)
-    for name, df in out.items():
+    written: list[str] = []
+
+    def sink(name, df, app_time):
         # batch_id = window index so replays of the same window replace
         # their own partition
         write_report_idempotent(
-            df, str(reports_dir), name, batch_id=(t - SYNTH_APP_TIME) // WINDOW_SECONDS
+            df, str(reports_dir), name,
+            batch_id=(app_time - SYNTH_APP_TIME) // WINDOW_SECONDS,
         )
-    spark.catalog.clearCache()  # process_batch persists base/flow
-    return round(time.perf_counter() - t0, 2), pruned, len(out)
+        written.append(name)
+
+    run_window(raw, dims, t, sink, deterministic=True)
+    return round(time.perf_counter() - t0, 2), pruned, len(written)
 
 
 def main() -> None:

@@ -122,7 +122,7 @@ def run_life(root: Path, sf_dir: str, crash_after: int | None) -> None:
         merge_bloom_state,
         merge_series_hour_counts,
         merge_sketch_state,
-        process_batch,
+        run_window,
     )
 
     spark = get_spark(app_name="restart-drill")
@@ -141,7 +141,6 @@ def run_life(root: Path, sf_dir: str, crash_after: int | None) -> None:
     for k in range(last + 1, N_BATCHES):
         app_k = SYNTH_APP_TIME + WINDOW_SECONDS * k
         raw = synthetic_raw_events(spark, sf_dir, app_time_s=app_k)
-        out = process_batch(raw, dims, app_k, deterministic=True)
 
         # fold the three state families from committed state + batch
         state["bloom"] = merge_bloom_state(
@@ -173,11 +172,14 @@ def run_life(root: Path, sf_dir: str, crash_after: int | None) -> None:
             # exactly like a restarted process would (and so a replay
             # can't accidentally reuse in-memory pre-crash state)
             state[name] = spark.read.parquet(_state_dir(root, name, k))
-        for rpt in DRILL_REPORTS:
-            write_report_idempotent(
-                out[rpt], str(root / "reports"), rpt, batch_id=k
-            )
-        spark.catalog.clearCache()  # process_batch persists base/flow
+
+        def sink(name, df, _app_time):
+            if name in DRILL_REPORTS:  # the other reports never run
+                write_report_idempotent(
+                    df, str(root / "reports"), name, batch_id=k
+                )
+
+        run_window(raw, dims, app_k, sink, deterministic=True)
 
         if crash_after is not None and k == crash_after:
             # hard crash BEFORE the commit: batch k's writes are on

@@ -3,7 +3,7 @@
 per-batch parity but a long-lived deployment's risk surface is the
 CROSS-batch loop — per-batch wall creeping up and stateful-merge state
 growing without bound. This drives N consecutive 5-minute windows
-through the SAME ``process_batch`` the production stream's foreachBatch
+through the SAME ``run_window`` the production stream's foreachBatch
 runs, folding the three cross-batch state families through
 write/read-back state tables exactly like a deployed foreachBatch
 would:
@@ -21,7 +21,7 @@ state (localCheckpoint = the write-to-store barrier), records wall and
 state row counts, and the artifact asserts the soak contract:
 last-3-batch mean wall within 1.5x of the first-3 mean (flat, no
 lineage/creep), bloom rows constant, HLL rows bounded, hour rows
-linear in windows.
+linear in windows, DataFrame cache empty after every window.
 
     python tools/soak_stream.py [sf_dir] [n_batches] [out.json]
 
@@ -51,7 +51,7 @@ from dnsflow_clickhouse_spark.streaming.pipeline import (
     merge_bloom_state,
     merge_series_hour_counts,
     merge_sketch_state,
-    process_batch,
+    run_window,
     streaming_cusum,
 )
 
@@ -166,6 +166,10 @@ def run_soak(spark, sf_dir: str, n_batches: int) -> dict:
     hll_rows: list[int] = []
     hour_rows: list[int] = []
     report_rows: list[int] = []
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    # entries that predate the soak (none in the tool's own session)
+    cached_before = cache.numCachedEntries()
+    cached_empty: list[bool] = []
     statestore: list[dict] = []
     bloom_state = hll_state = hour_state = None
 
@@ -173,11 +177,13 @@ def run_soak(spark, sf_dir: str, n_batches: int) -> dict:
         app_k = SYNTH_APP_TIME + WINDOW_SECONDS * k
         raw = synthetic_raw_events(spark, sf_dir, app_time_s=app_k)
         t0 = time.perf_counter()
-        out = process_batch(raw, dims, app_k, deterministic=True)
-        n_out = 0
-        for _, df in out.items():
+        written: list[str] = []
+
+        def noop_sink(name, df, _app_time):
             df.write.format("noop").mode("overwrite").save()
-            n_out += 1
+            written.append(name)
+
+        run_window(raw, dims, app_k, noop_sink, deterministic=True)
         # cross-batch state folds, localCheckpoint = the state-store
         # write barrier a deployed foreachBatch would hit per trigger
         bloom_state = merge_bloom_state(
@@ -216,8 +222,10 @@ def run_soak(spark, sf_dir: str, n_batches: int) -> dict:
         bloom_rows.append(bloom_state.count())
         hll_rows.append(hll_state.count())
         hour_rows.append(hour_state.count())
-        report_rows.append(n_out)
-        spark.catalog.clearCache()  # process_batch persists base/flow
+        report_rows.append(len(written))
+        # the DataFrame cache, not getPersistentRDDs(): the localCheckpointed
+        # state frames are persisted RDDs, but not cache entries
+        cached_empty.append(cache.numCachedEntries() == cached_before)
         print(
             f"batch {k}: wall={walls[-1]:.2f}s bloom={bloom_rows[-1]} "
             f"hll={hll_rows[-1]} hours={hour_rows[-1]}",
@@ -293,6 +301,7 @@ def run_soak(spark, sf_dir: str, n_batches: int) -> dict:
             "series_hour_counts": hour_rows,
         },
         "reports_per_batch": report_rows[-1],
+        "cached_frames_empty": cached_empty,
         "statestore": {
             "provider": os.environ.get(
                 "SPARK_GRAFT_SOAK_SS_PROVIDER", "hdfs-backed (default)"
@@ -305,6 +314,7 @@ def run_soak(spark, sf_dir: str, n_batches: int) -> dict:
             "hll_nondecreasing_bounded": hll_rows[-1] <= hll_rows[0] * 4 + 64,
             "hours_linear_in_windows": hour_rows[-1]
             <= hour_rows[0] * (n_batches + 1),
+            "cached_frames_empty": all(cached_empty),
         },
         # end-of-run reading is the soak's OWN 32-thread work, not
         # ambient (r12 advisory #3): labeled so the artifact can't be
