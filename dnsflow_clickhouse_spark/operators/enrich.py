@@ -4,34 +4,34 @@ DataFrame joins.
 Reference mechanics being re-expressed:
 - J1 clientIp -> clientName: first-match range lookup, default 5
   (DnsRptCH.scala:928-930, BeanObj.scala:17)
-- J5 aip -> geo (country/province/city/operator): binary-search range
-  lookup on every event (DnsRptCH.scala:956-962) and again on top-K rows
-  (:260-284)
+- J5 aip -> geo (country/province/city/operator): first-match range
+  lookup (IpSearch.java:41-105) on every event (DnsRptCH.scala:956-962)
+  and again on top-K rows (:260-284)
 - J2 aip -> business resource: last-match range lookup (:95-101, 590-596)
 - J3 aip -> inNet flag: membership-OR over media + segment ranges
-  (:222-235; SURVEY §7.4 pins the OR semantics)
+  (:222-235; SURVEY §7.4 pins the OR semantics), one helper ``add_in_net``
+  shared by the top rows and the user report
 - J4 authorityDomain -> company metadata: equi-join, last match wins
   (:247-258)
 
 Every dimension is resolved to at most one payload per probe *on the
-rule side* (interval flattening / last-wins dedup), so the fact table
-joins exactly once per dim and never shuffles — all joins broadcast.
+rule side* (``range_join.flatten_intervals`` for every range dim,
+overlapping geo rows included / last-wins dedup for J4), so the fact
+table joins exactly once per dim and never shuffles — all joins
+broadcast.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from dnsflow_clickhouse_spark.functions.domains import authority_domain, strip_scheme
 from dnsflow_clickhouse_spark.functions.net import ip_to_long
-from dnsflow_clickhouse_spark.operators.range_join import (
-    collect_bounds,
-    membership_flag,
-    range_join,
-)
+from dnsflow_clickhouse_spark.operators.range_join import membership_flag, range_join
 
 DEFAULT_CLIENT_NAME = 5
 
@@ -89,7 +89,6 @@ def enrich_base(events: DataFrame, dims: EnrichDims) -> DataFrame:
                 "city": "",
                 "operator": "",
             },
-            assume_disjoint=True,
         )
     else:
         for c in ("country", "province", "city", "operator"):
@@ -110,6 +109,28 @@ def _dedup_auth_last(auth: DataFrame) -> DataFrame:
     )
 
 
+def add_in_net(df: DataFrame, dims: EnrichDims) -> DataFrame:
+    """J3 inNet: ``resolver`` when ``aipLong`` falls in any media or
+    segment range, else 0 (membership OR over both tables,
+    DnsRptCH.scala:222-235). Both tables' bounds come back in one
+    collect; ``membership_flag`` merges them and picks the literal OR
+    predicate or the broadcast interval join by merged size."""
+    tables = [
+        t.select("min_long_ip", "max_long_ip")
+        for t in (dims.media_rules, dims.segment_rules)
+        if t is not None
+    ]
+    bounds = reduce(DataFrame.unionAll, tables).collect() if tables else []
+    return (
+        membership_flag(df, "aipLong", bounds, "__in_net")
+        .withColumn(
+            "inNet",
+            F.when(F.col("__in_net"), F.col("resolver")).otherwise(F.lit(0)).cast("long"),
+        )
+        .drop("__in_net")
+    )
+
+
 def enrich_top(top: DataFrame, dims: EnrichDims) -> DataFrame:
     """The reference's Tuple2Es enrichment pass over the top-K flow rows
     (DnsRptCH.scala:207-294), as one withColumns chain + broadcast joins.
@@ -124,23 +145,7 @@ def enrich_top(top: DataFrame, dims: EnrichDims) -> DataFrame:
     if "aipLong" not in df.columns:
         df = df.withColumn("aipLong", ip_to_long("aip"))
 
-    # J3 inNet: membership OR over media + segment ranges -> inNet =
-    # resolver when inside, else 0 (DnsRptCH.scala:222-235)
-    bounds: list[tuple[int, int]] = []
-    if dims.media_rules is not None:
-        bounds += collect_bounds(dims.media_rules)
-    if dims.segment_rules is not None:
-        bounds += collect_bounds(dims.segment_rules)
-    if bounds:
-        # size-routed: literal OR below ~100 merged ranges, broadcast
-        # interval join above (see membership_flag docstring)
-        df = membership_flag(df, F.col("aipLong"), bounds, "__in_net")
-    else:
-        df = df.withColumn("__in_net", F.lit(False))
-    df = df.withColumn(
-        "inNet",
-        F.when(F.col("__in_net"), F.col("resolver")).otherwise(F.lit(0)).cast("long"),
-    ).drop("__in_net")
+    df = add_in_net(df, dims)
 
     # J4 company metadata (last match wins, resolved dim-side)
     if dims.auth_domains is not None:
@@ -150,7 +155,8 @@ def enrich_top(top: DataFrame, dims: EnrichDims) -> DataFrame:
         for c in ("companyName", "soft", "websiteName", "websiteType"):
             df = df.withColumn(c, F.lit(None).cast("string"))
 
-    # J5 geo on aip (again, over top rows — reference :260-284)
+    # J5 geo on aip (again, over top rows — reference :260-284); overlapping
+    # geo rows resolve first-match in the flatten, as on the events
     if dims.geo is not None and "country" not in top.columns:
         df = range_join(
             df,
@@ -159,7 +165,6 @@ def enrich_top(top: DataFrame, dims: EnrichDims) -> DataFrame:
             match="first",
             payload_cols=["country", "province", "city", "operator"],
             defaults={"country": "", "province": "", "city": "", "operator": ""},
-            assume_disjoint=True,
         )
 
     # conditional counters (DnsRptCH.scala:263-280): resolver attributed

@@ -22,8 +22,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dnsflow_clickhouse_spark.functions.domains import authority_domain
+from dnsflow_clickhouse_spark.functions.net import ip_to_long
 from dnsflow_clickhouse_spark.operators.enrich import (
     EnrichDims,
+    add_in_net,
     enrich_business,
     join_users,
 )
@@ -301,23 +303,7 @@ def user_report(
     top2 = global_topk(
         named, [F.desc("error"), F.asc("clientIp"), F.asc("domain"), F.asc("aip")], k2
     )
-    from dnsflow_clickhouse_spark.functions.net import ip_to_long
-    from dnsflow_clickhouse_spark.operators.range_join import collect_bounds, in_any_range
-
-    bounds: list[tuple[int, int]] = []
-    if dims.media_rules is not None:
-        bounds += collect_bounds(dims.media_rules)
-    if dims.segment_rules is not None:
-        bounds += collect_bounds(dims.segment_rules)
-    top2 = top2.withColumn("aipLong", ip_to_long("aip")).withColumn(
-        "inNet",
-        F.when(
-            in_any_range(F.col("aipLong"), bounds) if bounds else F.lit(False),
-            F.col("resolver"),
-        )
-        .otherwise(F.lit(0))
-        .cast("long"),
-    ).drop("aipLong")
+    top2 = add_in_net(top2.withColumn("aipLong", ip_to_long("aip")), dims).drop("aipLong")
     if dims.user_info is not None:
         top2 = top2.join(F.broadcast(dims.user_info), "userName", "left")
     else:

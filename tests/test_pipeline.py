@@ -9,8 +9,9 @@ from collections import Counter
 import pytest
 from pyspark.sql import functions as F
 
+from dnsflow_clickhouse_spark import schemas as S
 from dnsflow_clickhouse_spark.operators import reports as R
-from dnsflow_clickhouse_spark.operators.enrich import enrich_base, enrich_top
+from dnsflow_clickhouse_spark.operators.enrich import EnrichDims, enrich_base, enrich_top
 from dnsflow_clickhouse_spark.sources.events import derive_events, parse_raw_lines
 from dnsflow_clickhouse_spark.streaming.pipeline import run_window
 
@@ -171,6 +172,72 @@ def test_full_fanout_smoke(spark):
     assert rows["dns_flow_qps"] >= 2
     assert rows["dns_flow_clear"] > 0
 
+
+def test_enrich_base_overlapping_geo_resolves_first_match(spark):
+    """J5 over overlapping geo rows: one event stays one row and takes the
+    first covering row's payload, as ``FX.py_base_events`` does."""
+    geo = [
+        ((8 << 24), (8 << 24) + 255, "美国", "加州", "山景城", "谷歌"),
+        ((8 << 24) + 100, (8 << 24) + 511, "中国", "浙江", "杭州", "电信"),
+    ]
+    aip = "8.0.0.150"
+    events = spark.createDataFrame([("10.0.0.1", aip)], "clientIp string, aip string")
+    out = enrich_base(
+        events, EnrichDims(geo=spark.createDataFrame(geo, S.GEO_SCHEMA))
+    ).collect()
+    assert len(out) == 1
+    want = next(g for g in geo if g[0] <= FX._ip2long(aip) <= g[1])
+    assert (out[0]["country"], out[0]["province"], out[0]["city"], out[0]["operator"]) == want[2:]
+
+
+# Column names, types and order of every report table, as the sinks see them.
+REPORT_SCHEMAS = {
+    "bigdata_dns_flow_top_user": "userName string, clientIp string, clientName int, "
+    "domain string, aip string, resolver bigint, error bigint, inNet bigint, "
+    "phone string, address string",
+    "dns_flow_clear": "authorityDomain string, domain string, clientName int, "
+    "dnsIp string, aip string, resolver bigint, error bigint, aipLong bigint, "
+    "resource_name string, resource_type string, resource_props string, "
+    "replaceDomain string, inNet bigint, companyName string, soft string, "
+    "websiteName string, websiteType string, country string, province string, "
+    "city string, operator string, abroadNum bigint, telecomNum bigint, "
+    "linkNum bigint, gatNum bigint, aIpAddr string",
+    "dns_flow_code_authority": "responseCode int, authorityDomain string, dnsNum bigint",
+    "dns_flow_code_authority_client": "clientName int, responseCode int, "
+    "authorityDomain string, dnsNum bigint",
+    "dns_flow_code_client_ip": "responseCode int, clientIp string, dnsNum bigint",
+    "dns_flow_code_client_ip_client": "clientName int, responseCode int, "
+    "clientIp string, dnsNum bigint",
+    "dns_flow_code_domain": "responseCode int, domain string, dnsNum bigint",
+    "dns_flow_code_domain_client": "clientName int, responseCode int, domain string, "
+    "dnsNum bigint",
+    "dns_flow_qps": "clientName int, dnsNum bigint, errNum bigint, avgNum bigint",
+    "dns_flow_request_type": "clientName int, requestType string, dnsNum bigint",
+    "dns_flow_response_code": "clientName int, responseCode int, dnsNum bigint",
+    "dns_flow_response_type": "clientName int, responseType string, dnsNum bigint",
+    "dns_flow_top_business": "clientName int, resourceName string, "
+    "resourceType string, dnsNum bigint",
+    "dns_flow_top_operator": "clientName int, operator string, dnsNum bigint",
+    "dns_flow_top_province": "clientName int, province string, dnsNum bigint",
+    "dns_flow_top_server": "clientName int, dnsIp string, dnsNum bigint",
+    "dns_flow_trend": "clientName int, domain string, aip string, companyName string, "
+    "authorityDomain string, soft string, websiteName string, websiteType string, "
+    "resolver bigint, inNet bigint, error bigint",
+    "dns_middle_user": "userName string, domain string, cnt bigint",
+}
+
+
+def test_report_schemas_pinned(spark):
+    """Every report's columns, types and order are fixed: a refactor of
+    the enrichment or report code must not move a sink column."""
+    lines = spark.createDataFrame([(l,) for l in FX.raw_lines()], "value string")
+    got: dict[str, str] = {}
+
+    def sink(name, df, _app_time):
+        got[name] = ", ".join(f"{c} {t}" for c, t in df.dtypes)
+
+    run_window(parse_raw_lines(lines), FX.build_dims(spark), FX.APP_TIME, sink, deterministic=True)
+    assert got == REPORT_SCHEMAS
 
 def test_parse_with_quarantine_accounts_for_every_line(spark):
     from dnsflow_clickhouse_spark.sources.events import (

@@ -5,14 +5,21 @@ lookup; :95-101 last-match business lookup)."""
 
 from __future__ import annotations
 
+import importlib
+import random
+
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from dnsflow_clickhouse_spark.operators.range_join import (
     flatten_intervals,
+    membership_flag,
     prefix_bucketed_range_join,
     range_join,
 )
+
+# the module itself: the operators package re-exports the range_join function
+RJ = importlib.import_module("dnsflow_clickhouse_spark.operators.range_join")
 
 RULES_SCHEMA = T.StructType(
     [
@@ -57,6 +64,57 @@ def test_flatten_intervals_last_match():
         (0, 4, "a"),
         (5, 20, "b"),
     ]
+
+
+def _flatten_brute_force(rows, lo_key, hi_key, payload_keys, match="first", order_key=None):
+    """Reference flatten: scan every rule for every elementary interval,
+    O(B*R)."""
+    if not rows:
+        return []
+    ordered = [(r[order_key] if order_key else i, r) for i, r in enumerate(rows)]
+    points = sorted({r[lo_key] for _, r in ordered} | {r[hi_key] + 1 for _, r in ordered})
+    best = min if match == "first" else max
+    out: list[dict] = []
+    for i in range(len(points) - 1):
+        lo, hi = points[i], points[i + 1] - 1
+        covering = [(o, r) for o, r in ordered if r[lo_key] <= lo and r[hi_key] >= hi]
+        if not covering:
+            continue
+        _, win = best(covering, key=lambda t: t[0])
+        payload = {k: win[k] for k in payload_keys}
+        if out and out[-1]["hi"] == lo - 1 and out[-1]["payload"] == payload:
+            out[-1]["hi"] = hi
+        else:
+            out.append({"lo": lo, "hi": hi, "payload": payload})
+    return out
+
+
+def test_flatten_sweep_matches_brute_force():
+    """The sweep agrees with the O(B*R) scan on random overlapping rule
+    sets: duplicate order keys (ties -> earlier row), first and last
+    match, input order or an order key, with and without a payload."""
+    rng = random.Random(7)
+    for _ in range(400):
+        rows = []
+        for _ in range(rng.randint(0, 12)):
+            lo = rng.randint(0, 60)
+            rows.append(
+                {
+                    "lo": lo,
+                    "hi": lo + rng.randint(-1, 25),  # -1: an empty rule
+                    "name": rng.choice("abc"),
+                    "idx": rng.randint(0, 4),
+                }
+            )
+        for match in ("first", "last"):
+            for order_key in (None, "idx"):
+                for payload in (["name", "idx"], ["name"], []):
+                    args = (rows, "lo", "hi", payload, match, order_key)
+                    assert flatten_intervals(*args) == _flatten_brute_force(*args)
+    # no payload = the merged union: overlapping and adjacent ranges coalesce
+    bounds = [(10, 20), (15, 30), (50, 60), (61, 70), (100, 100)]
+    flat = flatten_intervals(bounds, 0, 1, [])
+    assert [(iv["lo"], iv["hi"]) for iv in flat] == [(10, 30), (50, 70), (100, 100)]
 
 
 def test_range_join_first_match_and_default(spark):
@@ -154,17 +212,12 @@ def test_interval_overlap_join_dedup_and_semantics(spark):
         )
 
 
-def test_membership_flag_literal_and_join_paths_agree(spark):
-    from dnsflow_clickhouse_spark.operators.range_join import (
-        membership_flag,
-        merge_bounds,
-    )
-
+def test_membership_flag_literal_and_join_paths_agree(spark, monkeypatch):
     bounds = [(10, 20), (15, 30), (50, 60), (61, 70), (100, 100)]
-    assert merge_bounds(bounds) == [(10, 30), (50, 70), (100, 100)]
     facts = spark.createDataFrame([(v,) for v in [5, 10, 30, 31, 49, 70, 100, 101]], "p long")
-    lit = membership_flag(facts, "p", bounds, "f", literal_max=100)
-    joined = membership_flag(facts, "p", bounds, "f", literal_max=1)
+    lit = membership_flag(facts, "p", bounds, "f")
+    monkeypatch.setattr(RJ, "MEMBERSHIP_LITERAL_MAX", 1)
+    joined = membership_flag(facts, "p", bounds, "f")
     want = {5: False, 10: True, 30: True, 31: False, 49: False, 70: True, 100: True, 101: False}
     for df in (lit, joined):
         got = {r["p"]: r["f"] for r in df.collect()}
@@ -172,3 +225,4 @@ def test_membership_flag_literal_and_join_paths_agree(spark):
         assert df.count() == 8  # disjoint merge: join path adds no dup rows
     # large path really is a join, small path really is a predicate
     assert "Join" in joined._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in lit._jdf.queryExecution().executedPlan().toString()

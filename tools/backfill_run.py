@@ -57,6 +57,10 @@ from dnsflow_clickhouse_spark.streaming.pipeline import WINDOW_SECONDS, run_wind
 def _table_hashes(spark, reports_dir: Path, tables: list[str]) -> dict[str, list[int]]:
     out: dict[str, list[int]] = {}
     for t in tables:
+        if not any((reports_dir / t).rglob("*.parquet")):
+            # an empty report writes no part file, so there is no schema to read
+            out[t] = [0, 0]
+            continue
         df = spark.read.parquet(str(reports_dir / t))
         row = df.agg(
             F.expr(
