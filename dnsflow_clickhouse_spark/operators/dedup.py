@@ -49,7 +49,7 @@ from dnsflow_clickhouse_spark.functions.textfn import (
     tokens,
 )
 from dnsflow_clickhouse_spark.operators.similarity import quantize
-from dnsflow_clickhouse_spark.operators.util import cpu_repartition
+from dnsflow_clickhouse_spark.operators.util import barrier, cpu_repartition
 
 _LOG = logging.getLogger(__name__)
 
@@ -539,12 +539,8 @@ def minhash_bands_df(
         # plan-truncating barrier: Generate re-evaluates its input
         # expression per emitted row, so explode over the live signature
         # pipeline would redo the hash work n_bands times; checkpointing
-        # the compact (id, sig) rows makes the explode read attributes.
-        # LAZY (eager=False): the frame has exactly one consumer, so the
-        # consuming action materializes it in the same job — an eager
-        # barrier here only adds a blocking scheduler round-trip (part
-        # of round 2's fixed-cost catalog tax at small scale)
-        .localCheckpoint(eager=False)
+        # the compact (id, sig) rows makes the explode read attributes
+        .transform(barrier)
     )
     return _bands_from_sigs(sigs, n_group, rows, band_offset=first)
 
@@ -621,11 +617,12 @@ def lsh_candidate_pairs(
     a signature — expands to a quadratic pair list (1000 ids -> ~500k
     pairs) on a single aggregation row. When set, buckets with more
     than ``max_bucket_size`` members are DROPPED before pair expansion.
-    The function stays a PURE PLAN BUILDER either way (round-11, was an
-    eager audit job at call time): the drop count and max observed
+    The function stays a PURE PLAN BUILDER either way in the default
+    barrier mode (round-11, was an eager audit job at call time; see
+    ``operators.util.barrier``): the drop count and max observed
     bucket size are read AFTER the caller's action via
     :func:`lsh_hot_bucket_audit` (logs the drop warning; cheap — it
-    reads the guard's lazily-checkpointed bucket barrier), or composed
+    reads the guard's bucket barrier), or composed
     INTO a report as columns via :func:`lsh_hot_bucket_counts` so a
     drop is visible in the report values themselves.
     Lossy by construction: a pair inside a dropped bucket survives only
@@ -668,21 +665,22 @@ def lsh_candidate_pairs(
                 "returned frame",
                 max_bucket_size,
             )
-        # LAZY shared barrier: no job at call time (eager=False), but
+        # shared barrier: no job at call time in the default mode, but
         # the caller's first action materializes the compact bucketed
         # frame's checkpoint blocks, which the audit then reads instead
         # of re-running the signature pipeline. NOT an Observation:
         # observe-metrics below a downstream dropDuplicates/aggregate
         # are silently lost on this plan shape (verified on Spark
-        # 4.1.2). Caveat: the blocks are executor-local — on a cluster
-        # read the audit promptly after the action (a lost-executor
-        # recompute re-runs the pipeline, it does not corrupt).
-        buckets = buckets.localCheckpoint(eager=False)
+        # 4.1.2). Caveat: default-mode blocks are executor-local — on a
+        # cluster read the audit promptly after the action (a
+        # lost-executor recompute re-runs the pipeline, it does not
+        # corrupt).
+        buckets = barrier(buckets)
         out = _bucket_pairs(buckets.filter(F.size("ids") <= max_bucket_size))
         # carried for lsh_hot_bucket_audit / hot-bucket report columns;
         # plain attribute — DataFrame transformations downstream do NOT
         # propagate it (read the audit off the frame this function
-        # returned, BEFORE any localCheckpoint of your own)
+        # returned, BEFORE any barrier of your own)
         out._lsh_hot_bucket_audit = (buckets, max_bucket_size)
         return out
     return _bucket_pairs(buckets)
@@ -953,7 +951,7 @@ def lsh_candidate_pairs_grouped(
             .filter(F.size("ids") > 1)
         )
         if max_bucket_size is not None:
-            buckets = buckets.localCheckpoint(eager=False)
+            buckets = barrier(buckets)
             pairs = _bucket_pairs(
                 buckets.filter(F.size("ids") <= max_bucket_size)
             )
@@ -1180,7 +1178,7 @@ def banded_hamming_pairs(
         )
         # barrier: the join below must read these compact columns, not
         # re-run the signature pipeline once per side
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     a, b = bands.alias("a"), bands.alias("b")
     cand = a.join(
@@ -1251,7 +1249,7 @@ def ngram_jaccard_pairs(
         # live gram pipeline re-evaluates it per emitted gram, and the
         # self-join below must read these compact rows, not re-run the
         # gram pipeline once per side
-        .localCheckpoint(eager=False)
+        .transform(barrier)
         .select("id", F.size("grams").alias("n_grams"), F.explode("grams").alias("g"))
     )
     # Candidate pairs via self-equi-join on the shingle: pair generation
@@ -1312,7 +1310,7 @@ def overlap_containment_pairs(
     threshold_ppm = int(round(threshold * 1_000_000))
     grams = (
         staged_grams(df, id_col, text_col, ngram)
-        .localCheckpoint(eager=False)
+        .transform(barrier)
         .select("id", F.size("grams").alias("n_grams"), F.explode("grams").alias("g"))
     )
     a, b = grams.alias("a"), grams.alias("b")
@@ -1562,15 +1560,9 @@ def prefix_filtered_jaccard_pairs(
     hash-based fast paths (struct arrays demote both to interpreted
     pairwise comparison: measured 2.7s -> 18s at sf0.1).
     """
-    # LAZY checkpoints: plan truncation (the thing that stops Generate
-    # from inlining the live gram expression, and stops each consumer
-    # re-running the upstream pipeline) happens at plan-BUILD time;
-    # eager=True only added a blocking job per barrier (~0.2s driver
-    # gap each). First materialization lands inside the candidate job
-    # and the blocks persist for every later consumer.
-    grams0 = staged_grams(df, id_col, text_col, ngram).localCheckpoint(
-        eager=False
-    )
+    # barriers stop Generate from inlining the live gram expression and
+    # stop each consumer re-running the upstream pipeline
+    grams0 = barrier(staged_grams(df, id_col, text_col, ngram))
     exploded = grams0.select("id", F.explode("grams").alias("g"))
     freq = exploded.groupBy("g").agg(F.count(F.lit(1)).alias("__df"))
     docs = (
@@ -1593,8 +1585,8 @@ def prefix_filtered_jaccard_pairs(
         )
         # the main barrier: read twice by the candidate self-join and
         # twice by the verify joins; a live plan would recompute
-        # freq+join+sort per consumer (lazy: see grams0 above)
-        .localCheckpoint(eager=False)
+        # freq+join+sort per consumer
+        .transform(barrier)
     )
     prefix = docs.select(
         "id",
@@ -1668,7 +1660,7 @@ def prefix_filtered_jaccard_pairs(
         # AQE-coalesced onto 2-3 tasks; leading with it is exempt).
         .repartition(n_parts, "id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     ga = docs.select(F.col("id").alias("id_a"), F.col("grams").alias("__ga"))
     gb = docs.select(F.col("id").alias("id_b"), F.col("grams").alias("__gb"))
@@ -1759,7 +1751,7 @@ def winnow_fingerprints(
                 F.col("__grams")
             ).alias("__sel"),
         )
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     if hashes_only:
         # __sel is already array<long> of the distinct hashes
@@ -1876,7 +1868,7 @@ def scrub_duplicate_spans(
     )
     staged = df.select(
         F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("__toks")
-    ).localCheckpoint(eager=False)
+    ).transform(barrier)
     ex = staged.select(
         "id",
         F.size("__toks").cast("long").alias("__nt"),
@@ -1991,7 +1983,7 @@ def segment_dedup_keep_first(
         # Generate-input barrier (same reason as ngram_jaccard_pairs):
         # the explode below must read compact rows, not re-run the
         # tokenizer once per emitted segment
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     segs = base.select(
         "id",
@@ -2088,7 +2080,7 @@ def symspell_candidate_pairs(
             F.col(freq_col).cast("long").alias("freq"),
         )
         .withColumn("__vars", _deletion_variants(F.col("term"), max_edit))
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     posts = terms.select("term", F.explode("__vars").alias("v")).distinct()
     a, b = posts.alias("a"), posts.alias("b")
@@ -2168,7 +2160,7 @@ def group_overlap_matrix(
             text_col,
             ngram,
         )
-        .localCheckpoint(eager=False)
+        .transform(barrier)
         .select(F.col("id").alias("g"), F.explode("grams").alias("gram"))
         .distinct()
     )
@@ -2222,14 +2214,14 @@ def minhash_estimate_pairs(
     exact intersection counts are computed only for docs that appear in
     some candidate pair (then the pair set itself filters candidate×
     candidate gram collisions)."""
-    grams = staged_grams(df, id_col, text_col, ngram).localCheckpoint(eager=False)
+    grams = barrier(staged_grams(df, id_col, text_col, ngram))
     sig = grams.select(
         "id", _minhash_sig_udf(n_hashes)(F.col("grams")).alias("sig")
-    ).localCheckpoint(eager=False)
+    ).transform(barrier)
     pairs = lsh_candidate_pairs(
         df, id_col, text_col, n_hashes, n_bands, ngram, sig_df=sig
     )
-    p = pairs.select("id_a", "id_b").localCheckpoint(eager=False)
+    p = barrier(pairs.select("id_a", "id_b"))
     sa = sig.select(F.col("id").alias("id_a"), F.col("sig").alias("sa"))
     sb = sig.select(F.col("id").alias("id_b"), F.col("sig").alias("sb"))
     est = p.join(sa, "id_a").join(sb, "id_b").select(
@@ -2242,7 +2234,7 @@ def minhash_estimate_pairs(
     )
     # prune BEFORE the self-join: only docs present in some candidate
     # pair need exact gram intersections (the pruned (id, grams) frame
-    # is candidate-count-sized, so the eager barrier is cheap and lets
+    # is candidate-count-sized, so the barrier is cheap and lets
     # both self-join sides read attributes instead of re-running the
     # semi-join)
     cand_ids = (
@@ -2250,7 +2242,7 @@ def minhash_estimate_pairs(
         .union(p.select(F.col("id_b").alias("id")))
         .distinct()
     )
-    pruned = grams.join(cand_ids, "id", "semi").localCheckpoint(eager=False)
+    pruned = barrier(grams.join(cand_ids, "id", "semi"))
     ex = (
         pruned.select("id", F.size("grams").alias("ng"), F.explode("grams").alias("g"))
     )

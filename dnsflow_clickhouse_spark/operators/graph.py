@@ -11,9 +11,9 @@ Scale shape (min-label propagation):
 - each iteration is one equi-join (labels ⋈ symmetric edges) + one
   min-aggregate — both shuffle on the node id, so the partitioning is
   reused and AQE handles skewed hub nodes;
-- a lineage barrier after every iteration (lazy ``localCheckpoint`` by
-  default, reliable ``checkpoint()`` when ``checkpoint_dir`` is given —
-  see :func:`_make_barrier`) truncates the plan (an unbounded iterative
+- a lineage barrier after every iteration (``operators.util.barrier``:
+  executor-local by default, reliable when the session sets
+  ``spark.checkpoint.dir``) truncates the plan (an unbounded iterative
   plan otherwise grows until the optimizer chokes — the standard Spark
   fixpoint pitfall);
 - convergence is detected from the monotone label sum (labels only
@@ -29,43 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _make_barrier(spark, checkpoint_dir: str | None):
-    """Return the per-iteration lineage barrier for a fixpoint loop.
-
-    Cluster-scale durability contract: ``localCheckpoint`` stores
-    blocks on executors and TRUNCATES lineage, so losing one executor
-    mid-loop invalidates the checkpoint and kills the job — acceptable
-    in local mode and for short loops, a real hazard on a 1000-executor
-    cluster where the loop outlives the executors' MTBF. Passing
-    ``checkpoint_dir`` switches every barrier to a reliable
-    ``checkpoint()`` persisted to that (DFS) directory, which survives
-    executor loss; eager, because durability requires the write to
-    finish before the iteration is considered done.
-    """
-    if checkpoint_dir:
-        try:
-            from pyspark.errors import PySparkNotImplementedError
-
-            no_gateway: tuple = (AttributeError, PySparkNotImplementedError)
-        except ImportError:  # pragma: no cover
-            no_gateway = (AttributeError,)
-        try:
-            sc = spark.sparkContext
-        except no_gateway as exc:  # Spark Connect: no py4j SparkContext
-            raise RuntimeError(
-                "checkpoint_dir requires a classic SparkSession (the "
-                "checkpoint directory is SparkContext state); under "
-                "Spark Connect either pre-set spark.checkpoint.dir on "
-                "the server or omit checkpoint_dir to use "
-                "localCheckpoint"
-            ) from exc
-        # a real setCheckpointDir failure (unwritable/invalid dir on a
-        # classic session) propagates untouched — it is NOT a Connect
-        # problem and must not be misdiagnosed as one
-        sc.setCheckpointDir(checkpoint_dir)
-        return lambda df: df.checkpoint(eager=True)
-    return lambda df: df.localCheckpoint(eager=False)
+from dnsflow_clickhouse_spark.operators.util import barrier
 
 
 def connected_components(
@@ -74,7 +38,6 @@ def connected_components(
     dst: str = "dst",
     max_iter: int = 25,
     num_partitions: int | None = None,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """(id, comp) for every node appearing in ``edges``; ``comp`` is the
     smallest node id reachable from ``id`` (deterministic canonical
@@ -86,23 +49,14 @@ def connected_components(
     paying per-iteration task overhead on hundreds of near-empty
     partitions; leave None to inherit the session default for
     genuinely large graphs.
-
-    ``checkpoint_dir`` selects the reliable-checkpoint barrier for
-    cluster-scale runs (see :func:`_make_barrier` for the durability
-    contract); unset, barriers are executor-local.
     """
     nparts = num_partitions
-    barrier = _make_barrier(edges.sparkSession, checkpoint_dir)
     # materialize the (often expensive) edge pipeline ONCE — nodes, sym
     # and the first labels frame all derive from it, and without the
-    # barrier each derivation re-runs the full upstream plan.  All the
-    # barriers in this loop are LAZY (eager=False): the per-iteration
-    # convergence collect is the materializing action anyway, so eager
-    # checkpoints only added one extra blocking job per iteration
-    # (round 2's fixed-cost regression); lineage truncation — the thing
-    # the barrier exists for — happens at plan-build time either way,
-    # and the localCheckpoint's implicit persist dedupes any multi-
-    # reference compute above shuffle boundaries.
+    # barrier each derivation re-runs the full upstream plan.  In the
+    # default mode the per-iteration convergence collect is the
+    # materializing action, and the checkpoint's implicit persist
+    # dedupes any multi-reference compute above shuffle boundaries.
     edges = barrier(edges.select(F.col(src), F.col(dst)))
     sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).unionByName(
         edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
@@ -200,14 +154,10 @@ def dedup_clusters(
     id_a: str = "id_a",
     id_b: str = "id_b",
     num_partitions: int | None = None,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Cluster rollup over a near-dup pair list: (comp, n_members) with
     ``comp`` = the cluster's canonical (minimum) member id."""
-    cc = connected_components(
-        pairs, id_a, id_b,
-        num_partitions=num_partitions, checkpoint_dir=checkpoint_dir,
-    )
+    cc = connected_components(pairs, id_a, id_b, num_partitions=num_partitions)
     return cc.groupBy("comp").agg(F.count(F.lit(1)).alias("n_members"))
 
 
@@ -217,7 +167,6 @@ def pagerank_exact(
     src: str = "src",
     dst: str = "dst",
     num_partitions: int | None = None,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Fixed-iteration PageRank in exact integer micro-units: rank(n) =
     150000 + floor(850 * Σ_in floor(rank(s)/deg(s)) / 1000), starting
@@ -233,12 +182,11 @@ def pagerank_exact(
     sum by dst + one left join back onto the node set — all shuffles on
     the node id, partitioning reused across iterations. The edge
     derivation (often a window over the raw corpus) materializes ONCE
-    via localCheckpoint — without it the unrolled plan re-derives edges
+    behind a barrier — without it the unrolled plan re-derives edges
     in every iteration's every join — and each iteration's ranks are
     checkpointed to keep the lineage flat (the standard Spark fixpoint
     discipline, same as connected_components).
     """
-    barrier = _make_barrier(edges.sparkSession, checkpoint_dir)
     e = edges.select(F.col(src).alias("__s"), F.col(dst).alias("__d")).distinct()
     if num_partitions:
         # node sets are usually orders smaller than the corpus that
@@ -297,7 +245,6 @@ def canonical_representatives(
     id_a: str = "id_a",
     id_b: str = "id_b",
     num_partitions: int | None = None,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Pick which document survives each near-dup cluster: connected
     components over the pair list, then the highest-``quality`` member
@@ -314,10 +261,7 @@ def canonical_representatives(
     """
     from pyspark.sql import Window
 
-    cc = connected_components(
-        pairs, id_a, id_b,
-        num_partitions=num_partitions, checkpoint_dir=checkpoint_dir,
-    )
+    cc = connected_components(pairs, id_a, id_b, num_partitions=num_partitions)
     q = quality.select(
         F.col(id_col).alias("id"), F.col(quality_col).alias("__q")
     )
@@ -377,7 +321,6 @@ def component_census(
     id_a: str = "id_a",
     id_b: str = "id_b",
     num_partitions: int | None = None,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Per-cluster structure census for near-dup graphs: ``(comp,
     n_members, n_edges, n_triangles, is_clique)``. Tight cliques are
@@ -393,16 +336,13 @@ def component_census(
     # one barrier before the three-way fan-out (components, edge counts,
     # triangles) — without it the often-expensive pair pipeline above
     # `edges` re-evaluates once per consumer
-    e = _make_barrier(edges.sparkSession, checkpoint_dir)(
+    e = barrier(
         edges.select(
             F.least(F.col(id_a), F.col(id_b)).alias("a"),
             F.greatest(F.col(id_a), F.col(id_b)).alias("b"),
         ).distinct()
     )
-    cc = connected_components(
-        e, "a", "b",
-        num_partitions=num_partitions, checkpoint_dir=checkpoint_dir,
-    )
+    cc = connected_components(e, "a", "b", num_partitions=num_partitions)
     members = cc.groupBy("comp").agg(F.count(F.lit(1)).alias("n_members"))
     ecnt = (
         e.join(cc.withColumnRenamed("id", "a"), "a")
@@ -441,7 +381,6 @@ def hits_scores(
     src: str = "src",
     dst: str = "dst",
     num_partitions: int | None = None,
-    checkpoint_dir: str | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Fixed-iteration HITS (Kleinberg 1999, "Authoritative sources in
     a hyperlinked environment") over a bipartite/directed edge set in
@@ -466,7 +405,6 @@ def hits_scores(
         # auth is seeded inside the loop; zero iterations would leave
         # it None and crash on the final select — make that explicit
         raise ValueError(f"hits_scores needs iterations >= 1, got {iterations}")
-    barrier = _make_barrier(edges.sparkSession, checkpoint_dir)
     e = edges.select(F.col(src).alias("__s"), F.col(dst).alias("__d")).distinct()
     if num_partitions:
         e = e.repartition(num_partitions, "__s")
@@ -519,7 +457,6 @@ def kcore_peel(
     src: str = "src",
     dst: str = "dst",
     num_partitions: int | None = None,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Fixed-round k-core peeling (Seidman 1983; the distributed
     peel loop of Montresor et al. 2013): symmetrize the edge set,
@@ -534,15 +471,13 @@ def kcore_peel(
     Scale shape per round: one hash aggregate on the node key (degree
     count) + two semi-joins of the edge set against the surviving
     nodes — all keyed by node id; the edge frame is barriered each
-    round so the unrolled lineage stays flat. Like every fixpoint loop
-    in this module, pass ``checkpoint_dir`` on a real cluster.
+    round so the unrolled lineage stays flat.
 
     Returns surviving (id, degree) after ``rounds`` peels — degree is
     the count within the surviving subgraph.
     """
     if k < 1 or rounds < 1:
         raise ValueError(f"kcore_peel needs k >= 1 and rounds >= 1, got {k=} {rounds=}")
-    barrier = _make_barrier(edges.sparkSession, checkpoint_dir)
     # symmetrize + dedup: degree = number of distinct neighbors
     fwd = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     e = (
@@ -615,7 +550,7 @@ def label_propagation(
         # derivation (an LSH mining pass for lpa_communities) in the
         # node-set branch AND every round's message join — the same
         # barrier discipline as connected_components/kcore_peel
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     nodes = und.select(F.col("a").alias("id")).distinct()
     labels = nodes.select("id", F.col("id").alias("label"))

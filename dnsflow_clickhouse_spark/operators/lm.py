@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from dnsflow_clickhouse_spark.operators.util import barrier
+
 MICRO = 1_000_000
 NANO = 1_000_000_000
 
@@ -387,7 +389,7 @@ def pmi_collocations(
     (pmi_micro DESC, a, b), a total order.
     """
     base = df.select(toks.alias("toks")).filter(F.size("toks") >= 1)
-    base = base.localCheckpoint(eager=False)
+    base = barrier(base)
     uni = base.select(F.explode("toks").alias("t")).groupBy("t").agg(
         F.count(F.lit(1)).alias("c1")
     )

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from dnsflow_clickhouse_spark.operators.util import barrier
+
 PPM = 1_000_000
 
 
@@ -52,7 +54,7 @@ def bm25_topk(
     spark = df.sparkSession
     staged = df.select(
         F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("toks")
-    ).localCheckpoint(eager=False)
+    ).transform(barrier)
     lens = staged.select("id", F.size("toks").cast("long").alias("len"))
     post = (
         staged.select("id", F.explode("toks").alias("term"))
@@ -154,11 +156,11 @@ def lexical_cosine_rerank(
         # LIVE tokenizer expression re-evaluates it per emitted token,
         # and tf is read four times below (norms + both dot sides) —
         # without the checkpoint each reuse re-runs the whole pipeline
-        .localCheckpoint(eager=False)
+        .transform(barrier)
         .select("id", F.explode("__toks").alias("term"))
         .groupBy("id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     norms = tf.groupBy("id").agg(
         F.sum(F.col("tf") * F.col("tf")).cast("long").alias("norm_sq")
@@ -166,7 +168,7 @@ def lexical_cosine_rerank(
     # the candidate generator upstream (LSH signatures) is the
     # expensive lineage; it is read once for dot and once for the
     # final pair frame — pin it
-    p = pairs.select("id_a", "id_b").localCheckpoint(eager=False)
+    p = barrier(pairs.select("id_a", "id_b"))
     dot = (
         p.join(tf.select(F.col("id").alias("id_a"), "term", F.col("tf").alias("tf_a")), "id_a")
         .join(

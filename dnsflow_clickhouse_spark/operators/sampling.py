@@ -141,10 +141,12 @@ def global_positions(
     partition-count aggregate that is only ``n_parts`` rows (its own
     prefix-sum window is over those few rows, then broadcast back).
 
-    The ranged frame is persisted because the rank and offset branches
-    must see the SAME sampled range boundaries; recomputing the range
-    exchange per branch could legally resample. State held: the order
-    key columns only, spill-safe.
+    The ranged frame sits behind a lineage barrier because the rank and
+    offset branches must see the SAME sampled range boundaries;
+    recomputing the range exchange per branch could legally resample.
+    Both branches read its one materialization, and nothing stays in
+    the session's DataFrame cache afterwards. State held: the order key
+    columns only.
 
     The default partition count adapts to the input estimate (16 MiB
     per range partition, clamped to the session width) — a small frame
@@ -152,9 +154,7 @@ def global_positions(
     ``pos`` is a long: at the 100 TB design point row counts pass 2^31,
     where an int position would silently wrap.
     """
-    from pyspark import StorageLevel
-
-    from dnsflow_clickhouse_spark.operators.util import est_input_bytes
+    from dnsflow_clickhouse_spark.operators.util import barrier, est_input_bytes
 
     cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
     width = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
@@ -166,10 +166,10 @@ def global_positions(
         except Exception:
             est = None
         n = width if est is None else max(min(8, width), min(width, est >> 24))
-    ranged = (
-        df.repartitionByRange(n, *cols)
-        .withColumn("__pid", F.spark_partition_id())
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    ranged = barrier(
+        df.repartitionByRange(n, *cols).withColumn(
+            "__pid", F.spark_partition_id()
+        )
     )
     # offsets: n_parts rows — the unpartitioned prefix-sum window here is
     # over the tiny aggregate, not the data

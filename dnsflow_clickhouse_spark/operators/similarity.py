@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from dnsflow_clickhouse_spark.functions.numeric import portable_round
 
 from dnsflow_clickhouse_spark.operators.util import (
+    barrier,
     cpu_repartition,
     spark_broadcast,
 )
@@ -849,7 +850,7 @@ def kmeans_quantized(
     """
     base = df.select(
         F.col(id_col).alias("id"), quantize(F.col(vec_col), scale).alias("q")
-    ).localCheckpoint(eager=False)
+    ).transform(barrier)
 
     sample = (
         base.orderBy(_train_priority(F.col("id")), "id")
@@ -945,7 +946,7 @@ def pq_train_encode(
         raise ValueError("dim must divide evenly into m subspaces")
     base = df.select(
         F.col(id_col).alias("id"), quantize(F.col(vec_col), scale).alias("qv")
-    ).localCheckpoint(eager=False)
+    ).transform(barrier)
     sample = (
         base.orderBy(_train_priority(F.col("id")), "id")
         .limit(TRAIN_CAP)
@@ -1092,7 +1093,7 @@ def ivfpq_build(
         raise ValueError("dim must divide evenly into m subspaces")
     base = df.select(
         F.col(id_col).alias("id"), quantize(F.col(vec_col), scale).alias("q")
-    ).localCheckpoint(eager=False)
+    ).transform(barrier)
     sample = (
         base.orderBy(_train_priority(F.col("id")), "id")
         .limit(train_cap)
@@ -1233,7 +1234,7 @@ def grouped_kmeans_quantized(
         # callers whose input is already a cheap projection of a
         # checkpointed frame (ivfpq_build's residuals) pass
         # checkpoint=False and skip one materialization
-        base = base.localCheckpoint(eager=False)
+        base = barrier(base)
 
     sample = (
         base.orderBy(_train_priority(F.col("id")), "id", "g")

@@ -32,6 +32,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from dnsflow_clickhouse_spark.functions.textfn import tokens
+from dnsflow_clickhouse_spark.operators.util import barrier
 
 
 def positional_ngrams(toks: Column, k: int) -> Column:
@@ -91,7 +92,7 @@ def duplicate_span_stats(
     # as ngram_jaccard_pairs).
     staged = base.select(
         "doc_id", F.size("toks").alias("n_toks"), "toks"
-    ).localCheckpoint(eager=False)
+    ).transform(barrier)
     gram_key = (
         F.xxhash64(F.col("pg.gram")) if hash_grams else F.col("pg.gram")
     )

@@ -22,6 +22,7 @@ from dnsflow_clickhouse_spark.functions.textfn import (
     token_count,
     tokens,
 )
+from dnsflow_clickhouse_spark.operators.util import barrier
 
 # Tiny per-language stopword lists for the n-gram/stopword heuristic.
 LANG_STOPWORDS: dict[str, list[str]] = {
@@ -241,7 +242,7 @@ def mask_positions_report(
 
     staged = df.select(
         F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("toks")
-    ).localCheckpoint(eager=False)
+    ).transform(barrier)
     pos = staged.select(
         "id", F.posexplode("toks").alias("pos", "tok")
     ).withColumn(
@@ -299,9 +300,7 @@ def bigram_novelty(
 
     # Generate-input barrier (the explode-input rule): explode over a
     # LIVE HOF-built gram array re-evaluates the builder per emitted row
-    g = staged_grams(df, id_col, text_col, ngram=2).localCheckpoint(
-        eager=True
-    )
+    g = barrier(staged_grams(df, id_col, text_col, ngram=2))
     e = g.select("id", F.explode("grams").alias("gram"))
     dfreq = e.groupBy("gram").agg(F.count_distinct("id").alias("gdf"))
     per = (
@@ -362,7 +361,7 @@ def chi2_token_assoc(
         # distinct inside the barrier: explode must read a materialized
         # array, not re-evaluate tokenize+distinct per emitted row
         F.array_distinct(tokens(F.col(text_col))).alias("toks"),
-    ).localCheckpoint(eager=False)
+    ).transform(barrier)
     pres = staged.select("g", "id", F.explode("toks").alias("tok"))
     tok_df = pres.groupBy("tok").agg(
         F.count(F.lit(1)).cast("long").alias("n_tok")

@@ -32,11 +32,10 @@ Determinism: ties on pair count break by (left_sym, right_sym)
 lexicographic ascending — a pure ORDER BY, identical in every engine.
 
 Like the other iterative operators (graph.py), each round's state is
-staged behind a lineage barrier: lazy ``localCheckpoint`` by default,
-reliable ``checkpoint()`` when ``checkpoint_dir`` is given (the
-cluster-durability contract graph._make_barrier documents). Without
-the barrier the unrolled plan re-derives round r's state once per
-later round — O(R^2) evaluations.
+staged behind ``operators.util.barrier`` (executor-local by default,
+reliable when the session sets ``spark.checkpoint.dir``). Without the
+barrier the unrolled plan re-derives round r's state once per later
+round — O(R^2) evaluations.
 """
 
 from __future__ import annotations
@@ -45,7 +44,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from dnsflow_clickhouse_spark.functions.textfn import tokens
-from dnsflow_clickhouse_spark.operators.graph import _make_barrier
+from dnsflow_clickhouse_spark.operators.util import barrier
 
 SEP = "  "  # double-space symbol separator (see module docstring)
 
@@ -104,15 +103,12 @@ def bpe_learn(
     df: DataFrame,
     text_col: str,
     n_merges: int,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Learn ``n_merges`` BPE merges over ``text_col``; returns the
     ordered merge table (round, left_sym, right_sym, pair_count) —
     round starts at 1. The merge table is the trained tokenizer
     artifact; re-applying rounds 1..r to any text reproduces the
     vocabulary after r merges."""
-    spark = df.sparkSession
-    barrier = _make_barrier(spark, checkpoint_dir)
     states = barrier(_initial_states(word_frequency_table(df, text_col)))
     merge_rows: list[DataFrame] = []
     for r in range(1, n_merges + 1):

@@ -90,6 +90,34 @@ def maybe_persist(df: DataFrame, source: DataFrame | None = None):
     return df
 
 
+def barrier(df: DataFrame) -> DataFrame:
+    """The package's one lineage barrier: truncate ``df``'s plan so
+    every consumer reads its materialized rows instead of re-running
+    the upstream pipeline (fixpoint loops, Generate inputs, frames read
+    by several joins or by a separate audit job).
+
+    Default mode: ``localCheckpoint(eager=False)``. Lazy, because the
+    truncation happens at plan-build time either way; an eager barrier
+    only adds one blocking job (a scheduler round-trip) per call, which
+    at small scale was a fixed-cost tax on the whole catalog. The first
+    action that reads the frame materializes it, and the blocks persist
+    for every later consumer. Executor-local blocks do not survive the
+    loss of an executor: a long loop on a large cluster can outlive
+    the executors' MTBF, and a lost block fails the job.
+
+    Reliable mode: when the session has Spark's own
+    ``spark.checkpoint.dir`` (``--conf spark.checkpoint.dir=D`` at
+    submit, which also sets the SparkContext's checkpoint directory),
+    every barrier is ``checkpoint(eager=True)`` written to that (DFS)
+    directory and survives executor loss. Eager, because durability
+    requires the write to finish before the barrier is passed. The
+    mode is chosen once per deployment, never per call site.
+    """
+    if df.sparkSession.conf.get("spark.checkpoint.dir", None):
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=False)
+
+
 class _ClosureBroadcast:
     """Connect fallback for ``SparkContext.broadcast``: same ``.value``
     surface, but the payload rides each task's serialized closure

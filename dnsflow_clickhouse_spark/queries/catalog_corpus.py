@@ -18,7 +18,7 @@ from dnsflow_clickhouse_spark.operators.sampling import (
     per_key_sample,
     stratified_sample,
 )
-from dnsflow_clickhouse_spark.operators.util import cpu_repartition
+from dnsflow_clickhouse_spark.operators.util import barrier, cpu_repartition
 from dnsflow_clickhouse_spark.queries.catalog_mlops import _sql_poly, _SQL_TOKS
 from dnsflow_clickhouse_spark.sources.tables import load_table
 
@@ -970,7 +970,7 @@ def boilerplate_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 1s at sf0.1)
     staged = d.select(
         "doc_id", tokens(F.col("text")).alias("toks")
-    ).localCheckpoint(eager=False)
+    ).transform(barrier)
     pos = staged.select(
         "doc_id",
         F.explode(positional_ngrams(F.col("toks"), 8)).alias("pg"),

@@ -34,7 +34,7 @@ from dnsflow_clickhouse_spark.operators.text_analysis import (
     _LANG_ORDER,
     analyze_documents,
 )
-from dnsflow_clickhouse_spark.operators.util import cpu_repartition
+from dnsflow_clickhouse_spark.operators.util import barrier, cpu_repartition
 from dnsflow_clickhouse_spark.sources.tables import load_table
 
 # ---------------------------------------------------------------------------
@@ -986,20 +986,18 @@ def incremental_dedup_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the existing corpus are never reread)."""
     d = load_table(spark, sf_dir, "documents")
     # one signature pass carries the content hash alongside the simhash
-    # (keep_cols), so there is no self-join. The LAZY barrier makes the
+    # (keep_cols), so there is no self-join. The barrier makes the
     # three consumers below (new-batch probe + the two existing-corpus
     # build sides) read ONE materialization of the compact
     # (id, simhash, md5) rows instead of re-running the Arrow signature
-    # kernel per branch; lazy because the first consuming job
-    # materializes it — eager would only add a blocking scheduler
-    # round-trip.
+    # kernel per branch.
     base = (
         simhash_df(
             d.withColumn("__h", F.md5("text")), "doc_id", "text", 16,
             keep_cols=["__h"],
         )
         .withColumnRenamed("simhash", "__sim")
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     new_b = base.filter(F.col("id") % 2 == 1)
     old_h = (

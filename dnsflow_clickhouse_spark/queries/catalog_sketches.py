@@ -24,6 +24,7 @@ from dnsflow_clickhouse_spark.operators.sketches import (
     hll_registers,
 )
 from dnsflow_clickhouse_spark.queries.catalog_mlops import _sql_poly
+from dnsflow_clickhouse_spark.operators.util import barrier
 from dnsflow_clickhouse_spark.sources.tables import load_table
 
 # ---------------------------------------------------------------------------
@@ -442,7 +443,7 @@ def kmv_corpus_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max(F.when(F.col("side") == 0, 1).otherwise(0)).alias("in_a"),
             F.max(F.when(F.col("side") == 1, 1).otherwise(0)).alias("in_b"),
         )
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     exact = tagged.agg(
         F.sum("in_a").alias("n_exact_a"),

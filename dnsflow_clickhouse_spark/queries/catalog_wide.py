@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dnsflow_clickhouse_spark.operators.util import barrier
 from dnsflow_clickhouse_spark.sources.tables import load_table
 
 # deterministic bound on the exact (quadratic / GEMM) verification side:
@@ -89,7 +90,7 @@ def _neardup_queries(emb: DataFrame, cap: int = EXACT_CAP) -> DataFrame:
                 / F.lit(1000.0)
             ),
         ).alias("embedding"),
-    ).localCheckpoint(eager=False)
+    ).transform(barrier)
 
 
 def simhash_wide_neardups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -111,10 +112,10 @@ def simhash_wide_neardups(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     sig = simhash_df(
         d, "doc_id", "text", n_bits=SIMHASH_BITS, hash_fn=F.xxhash64
-    ).localCheckpoint(eager=False)
+    ).transform(barrier)
     banded = banded_hamming_pairs(
         sig, "id", "simhash", SIMHASH_BITS, SIMHASH_BANDS, SIMHASH_MAXHAM
-    ).localCheckpoint(eager=False)
+    ).transform(barrier)
 
     cap_ids = _capped_ids(d, "doc_id")
     sub = sig.join(cap_ids, "id", "semi").select("id", "simhash")
@@ -181,7 +182,7 @@ def embedding_ann_wide_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = _neardup_queries(emb)
     exact = cosine_topk(q, emb, "vec_id", "embedding", k=1).select(
         "query_id", "neighbor_id"
-    ).localCheckpoint(eager=False)
+    ).transform(barrier)
     ann = hyperplane_lsh_topk(
         q,
         emb,
@@ -237,7 +238,7 @@ def minhash_wide_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         max_bucket_size=MH_BUCKET_CAP,
     )
     hot = lsh_hot_bucket_counts(cands_raw).select("n_hot_buckets")
-    cands = cands_raw.localCheckpoint(eager=False)
+    cands = barrier(cands_raw)
     cap_ids = _capped_ids(d, "doc_id")
     sub = d.join(
         cap_ids.withColumnRenamed("id", "doc_id"), "doc_id", "semi"
@@ -246,7 +247,7 @@ def minhash_wide_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         prefix_filtered_jaccard_pairs(sub, "doc_id", "text", threshold=0.5)
         .filter(F.col("jaccard") >= 0.7)
         .select("id_a", "id_b")
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     found = truth.join(cands, ["id_a", "id_b"], "semi")
     return (
@@ -303,7 +304,7 @@ def ivfpq_wide_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = _neardup_queries(emb, cap=IVFPQ_W_QUERIES)
     exact = cosine_topk(q, emb, "vec_id", "embedding", k=1).select(
         "query_id", "neighbor_id"
-    ).localCheckpoint(eager=False)
+    ).transform(barrier)
     codes, cells, books = ivfpq_build(
         emb, "vec_id", "embedding", dim=64,
         n_cells=IVFPQ_W_CELLS, m=IVFPQ_W_M, k=IVFPQ_W_K,

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from dnsflow_clickhouse_spark.io import write_reports_concurrent
+from dnsflow_clickhouse_spark.io import merge_additive, write_reports_concurrent
 from dnsflow_clickhouse_spark.operators import reports as R
 from dnsflow_clickhouse_spark.operators.enrich import (
     EnrichDims,
@@ -369,15 +369,9 @@ def merge_cms_state(state: DataFrame | None, batch_sketch: DataFrame) -> DataFra
     (io.write_report_idempotent) or exactly-once foreachBatch
     bookkeeping when retries are possible. State stays depth x width
     rows forever."""
-    from pyspark.sql import functions as F
-
     if state is None:
         return batch_sketch
-    return (
-        state.unionByName(batch_sketch)
-        .groupBy("row", "bucket")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
+    return merge_additive(state, batch_sketch, ["row", "bucket"], ["cnt"])
 
 
 def merge_qh_state(
@@ -432,15 +426,9 @@ def merge_hist_state(
     against a fixed REFERENCE histogram (training-time distribution) and
     score drift per batch on bucket-count-sized frames — the streaming
     face of operators/evaluation.psi_report."""
-    from pyspark.sql import functions as F
-
     if state is None:
         return batch_cells
-    return (
-        state.unionByName(batch_cells)
-        .groupBy(*key_cols, "b")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
+    return merge_additive(state, batch_cells, [*key_cols, "b"], ["cnt"])
 
 
 def streaming_psi(
@@ -482,15 +470,9 @@ def merge_hour_counts(state: DataFrame | None, batch_counts: DataFrame) -> DataF
     days x 24 rows. Like merge_hist_state this is NOT replay-idempotent
     (counts re-add) — pair with the idempotent batch-id sink when
     retries are possible."""
-    from pyspark.sql import functions as F
-
     if state is None:
         return batch_counts
-    return (
-        state.unionByName(batch_counts)
-        .groupBy("day", "hod")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
+    return merge_additive(state, batch_counts, ["day", "hod"], ["cnt"])
 
 
 def streaming_qps_anomaly(
@@ -524,11 +506,7 @@ def merge_series_hour_counts(
     sees the corrected series."""
     if state is None:
         return batch_counts
-    return (
-        state.unionByName(batch_counts)
-        .groupBy("series", "hour_ep")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
+    return merge_additive(state, batch_counts, ["series", "hour_ep"], ["cnt"])
 
 
 def streaming_cusum(
@@ -580,11 +558,7 @@ def merge_bucket_counts(
     batch-id sink when retries are possible."""
     if state is None:
         return batch_counts
-    return (
-        state.unionByName(batch_counts)
-        .groupBy("k", "b")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
+    return merge_additive(state, batch_counts, ["k", "b"], ["cnt"])
 
 
 def streaming_ewma(counts: DataFrame, window_buckets: int = 8) -> DataFrame:

@@ -245,6 +245,26 @@ def test_global_positions_matches_single_partition_ranking(spark):
     assert got == want  # dense 1..n, identical to the global ordering
 
 
+def test_shuffle_shards_leave_no_cached_frames(spark, tmp_path):
+    """global_positions puts its range-partitioned frame behind a
+    lineage barrier, not a persist that no caller can release: running
+    deterministic_shuffle_shards leaves the session's DataFrame cache as
+    it found it, and the positions stay a dense 1..n permutation."""
+    from dnsflow_clickhouse_spark.queries.catalog_corpus import (
+        deterministic_shuffle_shards,
+    )
+
+    spark.range(0, 300).select(F.col("id").alias("doc_id")).write.parquet(
+        str(tmp_path / "documents.parquet")
+    )
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.numCachedEntries()
+    rows = deterministic_shuffle_shards(spark, str(tmp_path)).collect()
+    assert cache.numCachedEntries() == before
+    assert sorted(r.pos for r in rows) == list(range(1, 301))
+    assert sorted(r.doc_id for r in rows) == list(range(300))
+
+
 def test_budget_allocation_sums_exactly_and_reports_shortfall(spark):
     from dnsflow_clickhouse_spark.operators.corpus import budget_allocation
 

@@ -435,15 +435,3 @@ def test_spark_broadcast_falls_back_without_sparkcontext(spark):
     real = spark_broadcast(spark, ("x", 7))
     assert real.value == ("x", 7)
     assert type(real).__name__ == "Broadcast"
-
-
-def test_graph_checkpoint_dir_raises_clearly_without_sparkcontext():
-    from dnsflow_clickhouse_spark.operators.graph import _make_barrier
-
-    class _ConnectStub:
-        @property
-        def sparkContext(self):
-            raise AttributeError("Spark Connect client: no SparkContext")
-
-    with pytest.raises(RuntimeError, match="classic SparkSession"):
-        _make_barrier(_ConnectStub(), "/tmp/ckpt")

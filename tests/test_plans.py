@@ -189,7 +189,7 @@ def test_symspell_verify_never_cartesian(spark):
 
 
 def test_lexical_rerank_reads_checkpoints_not_lsh_lineage(spark):
-    # the TF frame and candidate pairs are pinned behind localCheckpoint
+    # the TF frame and candidate pairs are pinned behind lineage
     # barriers: the scored plan must read the scanned RDDs, not re-run
     # the minhash signature pipeline per reuse (first cut did: 252s ->
     # 3.6s at sf0.1)
@@ -226,3 +226,38 @@ def test_oov_vocab_rides_a_broadcast(spark):
     plan = physical_plan(df)
     assert "BroadcastExchange" in plan
     assert "SortMergeJoin" not in plan
+
+
+def test_lineage_barrier_has_one_call_site():
+    """operators/util.barrier is the package's only caller of
+    localCheckpoint/checkpoint (so the executor-local vs reliable choice
+    is made once, by ``spark.checkpoint.dir``), and no operator takes a
+    per-call ``checkpoint_dir`` parameter."""
+    import ast
+    import re
+    from pathlib import Path
+
+    import dnsflow_clickhouse_spark
+
+    pkg = Path(dnsflow_clickhouse_spark.__file__).resolve().parent
+    util = pkg / "operators" / "util.py"
+    calls = re.compile(r"\.(localCheckpoint|checkpoint)\(")
+    offenders = [
+        f"{path.relative_to(pkg)}:{i}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path != util
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if calls.search(line)
+    ]
+    assert offenders == [], offenders
+    assert calls.search(util.read_text())
+
+    params = []
+    for path in sorted((pkg / "operators").rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                a = node.args
+                names = [x.arg for x in a.posonlyargs + a.args + a.kwonlyargs]
+                if "checkpoint_dir" in names:
+                    params.append(f"{path.name}:{node.name}")
+    assert params == [], params

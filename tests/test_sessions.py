@@ -103,37 +103,118 @@ def test_connected_components_deep_chain_converges(spark):
     assert set(cc.values()) == {1}, "deep chain did not fully converge"
 
 
-def test_connected_components_reliable_checkpoint(spark, tmp_path):
-    """The durable-barrier path (checkpoint_dir -> reliable
-    ``checkpoint()`` instead of localCheckpoint) must produce identical
-    clusters AND actually write checkpoint state to the directory —
-    the cluster-scale durability contract (executor loss mid-loop
-    recovers from the checkpoint dir, not executor-local blocks)."""
+def _barrier_ops(spark) -> dict:
+    """Run the barrier-heavy operators; return each one's sorted rows
+    and the number of reliable-checkpoint RDD directories that exist
+    after it ran, plus the LSH hot-bucket audit."""
+    import os
+
+    from dnsflow_clickhouse_spark.operators.dedup import (
+        lsh_candidate_pairs,
+        lsh_hot_bucket_audit,
+    )
     from dnsflow_clickhouse_spark.operators.graph import (
         connected_components,
         pagerank_exact,
     )
+    from dnsflow_clickhouse_spark.operators.tokenizer import bpe_learn
 
-    ckpt = str(tmp_path / "reliable_ckpt")
+    ckpt = spark.conf.get("spark.checkpoint.dir", None)
+    out: dict = {"conf": ckpt, "ops": {}}
+
+    def record(name, df):
+        rdd_dirs = 0
+        rows = sorted(list(r) for r in df.collect())
+        if ckpt:
+            rdd_dirs = sum(
+                d.startswith("rdd-") for _, ds, _ in os.walk(ckpt) for d in ds
+            )
+        out["ops"][name] = {"rows": rows, "rdd_dirs": rdd_dirs}
+
     edges = spark.createDataFrame(
         [(5, 4), (4, 3), (3, 2), (2, 1), (10, 11)], "src long, dst long"
     )
-    cc = {
-        r.id: r.comp
-        for r in connected_components(edges, checkpoint_dir=ckpt).collect()
-    }
-    assert cc == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10}
+    record("connected_components", connected_components(edges))
+    record("pagerank_exact", pagerank_exact(edges, iterations=2))
+    text = " ".join(
+        ["low"] * 5 + ["lower"] * 2 + ["newest"] * 6 + ["widest"] * 3
+    )
+    corpus = spark.createDataFrame([(text,)], "text string")
+    record("bpe_learn", bpe_learn(corpus, "text", 4))
+    docs = spark.range(0, 160).selectExpr(
+        "id AS doc_id",
+        "CASE WHEN id < 120 THEN 'same text every single time' "
+        "ELSE concat('doc ', CAST(id % 20 AS STRING), ' other words here') "
+        "END AS text",
+    )
+    pairs = lsh_candidate_pairs(docs, "doc_id", "text", max_bucket_size=100)
+    record("lsh_candidate_pairs", pairs)
+    audit = lsh_hot_bucket_audit(pairs)
+    out["audit"] = [audit["n_hot"], audit["max_bucket"]]
+    return out
+
+
+_RELIABLE_SCRIPT = """
+import json
+from dnsflow_clickhouse_spark.session import get_spark
+from test_sessions import _barrier_ops
+spark = get_spark(app_name="barrier-reliable", master="local[2]",
+                  shuffle_partitions=4)
+print("RESULT " + json.dumps(_barrier_ops(spark)))
+spark.stop()
+"""
+
+
+def test_reliable_barrier_mode_matches_default_and_writes_checkpoints(
+    spark, tmp_path
+):
+    """Spark's own ``spark.checkpoint.dir`` switches every lineage
+    barrier (operators.util.barrier) to a reliable checkpoint: the
+    graph loops, the BPE loop and the LSH hot-bucket guard return the
+    same rows as in the default (executor-local) mode, and each of
+    them writes checkpoint files to the directory. The reliable run
+    is a subprocess started with the conf at submit time, so the
+    shared test session's SparkContext never gets a checkpoint
+    directory."""
+    import json
     import os
+    import subprocess
+    import sys
+    from pathlib import Path
 
-    written = any(files for _, _, files in os.walk(ckpt))
-    assert written, "reliable checkpoint wrote nothing to the checkpoint dir"
+    tests_dir = Path(__file__).resolve().parent
+    ckpt = tmp_path / "reliable_ckpt"
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join([str(tests_dir.parent), str(tests_dir)])
+    env["PYSPARK_SUBMIT_ARGS"] = (
+        f"--conf spark.checkpoint.dir={ckpt} pyspark-shell"
+    )
+    env["SPARK_DRIVER_MEM"] = "2g"
+    proc = subprocess.run(
+        [sys.executable, "-c", _RELIABLE_SCRIPT],
+        env=env, capture_output=True, text=True, timeout=900,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    result = [ln for ln in proc.stdout.splitlines() if ln.startswith("RESULT ")]
+    reliable = json.loads(result[-1][len("RESULT "):])
+    default = _barrier_ops(spark)
 
-    pr_local = {r.id: r.rank for r in pagerank_exact(edges, iterations=2).collect()}
-    pr_durable = {
-        r.id: r.rank
-        for r in pagerank_exact(edges, iterations=2, checkpoint_dir=ckpt).collect()
-    }
-    assert pr_local == pr_durable
+    assert default["conf"] is None
+    assert reliable["conf"] == str(ckpt)
+    names = list(default["ops"])
+    for name in names:
+        assert reliable["ops"][name]["rows"] == default["ops"][name]["rows"], name
+    # sanity on the rows themselves, so equal-but-empty cannot pass
+    cc = dict(map(tuple, default["ops"]["connected_components"]["rows"]))
+    assert cc == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10}
+    assert default["ops"]["lsh_candidate_pairs"]["rows"]
+    # 8 hashes / 4 bands: each band has one hot bucket of the 120
+    # identical docs, dropped by the guard
+    assert reliable["audit"] == default["audit"] == [4, 120]
+    # every operator added checkpoint RDD directories of its own
+    counts = [reliable["ops"][n]["rdd_dirs"] for n in names]
+    assert counts[0] > 0, counts
+    assert all(b > a for a, b in zip(counts, counts[1:])), counts
 
 
 def test_canonical_representatives(spark):
